@@ -58,15 +58,6 @@ def exact_quantiles(df: DataFrame, col: str, probs: Sequence[float]) -> list[flo
     return list(row["q"])
 
 
-def approx_quantiles(
-    df: DataFrame, col: str, probs: Sequence[float], relative_error: float = 0.01
-) -> list[float]:
-    """A3 as-shipped: Greenwald-Khanna sketch — one pass, mergeable across
-    partitions, the right choice at 100 TB where exact percentile would
-    shuffle all values."""
-    return df.approxQuantile(col, list(probs), relative_error)
-
-
 def exact_rank_select(
     df: DataFrame,
     col: str,

@@ -187,7 +187,7 @@ def centroid_classify(
     window on the (narrow) scored rows and the k²-row final count."""
     spark = df.sparkSession
     cents = label_centroids(df, vec_col, label_col)
-    cdf = local_df(spark, 
+    cdf = local_df(spark,
         [(lb, vec) for lb, vec in cents], "cand LONG, cvec ARRAY<LONG>"
     )
     q = df.select(

@@ -46,18 +46,6 @@ def quantize(col: Column) -> Column:
     return F.transform(col, lambda x: F.round(x.cast("double") * F.lit(_QSCALE)).cast("long"))
 
 
-def dot_q_hof(a: Column, b: Column) -> Column:
-    """Exact integer dot product of two quantized vectors (left fold).
-
-    Reference spelling of the arithmetic the Arrow path vectorizes; kept
-    for oracle documentation and the equivalence test. Higher-order
-    functions are CodegenFallback in Spark — interpreted per element —
-    so the hot paths use ``dot_q`` below (~5× measured)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x
-    )
-
-
 def _make_dot_q_batch():
     """Factory so the batch function's qualname contains ``<locals>`` —
     cloudpickle then ships it to Python workers BY VALUE instead of by
@@ -81,8 +69,9 @@ _dot_q_batch = _make_dot_q_batch()
 
 def dot_q(a: Column, b: Column) -> Column:
     """Exact integer dot product, Arrow-vectorized: one einsum per batch
-    over int64 — identical values to ``dot_q_hof`` (integer arithmetic is
-    associative; no float drift), ~5× faster than the interpreted HOF.
+    over int64 — identical values to the ``aggregate(zip_with(...))``
+    higher-order-function fold (integer arithmetic is associative; no
+    float drift), ~5× faster than that interpreted HOF.
     The UDF is built lazily so importing this module needs no live
     SparkSession (pandas_udf resolves its return type eagerly)."""
     from pyspark.sql.types import LongType
@@ -506,31 +495,12 @@ def _plane_weights(p: int, dims: int = 64) -> list[int]:
     ]
 
 
-def lsh_bucket_hof(vec_q: Column, n_planes: int = _N_PLANES, dims: int = 64) -> Column:
-    """Sign-pattern bucket id: bit p = [dot(vec, plane_p) >= 0].
-    Exact integer dots (quantized vec × integer plane) → no float drift.
-    Pure-Column reference spelling (see ``lsh_bucket`` for why the hot
-    paths use the Arrow form instead)."""
-    def bit(p: int) -> Column:
-        plane = F.array(*[F.lit(w).cast("long") for w in _plane_weights(p, dims)])
-        dot = F.aggregate(
-            F.zip_with(vec_q, plane, lambda x, w: x * w),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        return F.when(dot >= 0, F.lit(2**p).cast("long")).otherwise(F.lit(0).cast("long"))
-
-    out = bit(0)
-    for p in range(1, n_planes):
-        out = out + bit(p)
-    return out
-
-
 def lsh_bucket(vec_q: Column, n_planes: int = _N_PLANES, dims: int = 64) -> Column:
     """Sign-pattern bucket id, Arrow-vectorized: all n_planes dots are one
     ``B×dims @ dims×planes`` int64 matmul per batch, then a sign/bit-pack.
-    Bit-identical to ``lsh_bucket_hof`` (exact integer arithmetic, same
-    deterministic planes the SQL oracle generates); measured ~5× faster —
+    Bit-identical to the per-plane ``aggregate(zip_with(...))`` column
+    spelling (exact integer arithmetic, same deterministic planes the SQL
+    oracle generates); measured ~5× faster —
     n_planes interpreted aggregate-HOFs cost ~1 ms/row, which would
     dominate the whole pipeline at corpus scale."""
     from pyspark.sql.types import LongType

@@ -212,7 +212,7 @@ def interval_join(
     ``sequence``; points map to their single bin; the join is then a plain
     *equi-join on the bin key* plus the exact range predicate as a
     post-filter. Candidate volume is |points| + Σ(interval_len/bin_width)
-    — linear, shuffled by bin, AQE-splittable — instead of |points| × 
+    — linear, shuffled by bin, AQE-splittable — instead of |points| ×
     |intervals|. ``bin_width`` trades explode factor against bin
     selectivity; pick it near the median interval length.
 

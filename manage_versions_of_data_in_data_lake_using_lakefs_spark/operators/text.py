@@ -44,10 +44,6 @@ def _stopword_hits(tokens: Column, words: list[str]) -> Column:
     return F.size(F.filter(tokens, lambda t: t.isin(*words)))
 
 
-def with_tokens(df: DataFrame, text_col: str = "text", out: str = "toks") -> DataFrame:
-    return df.withColumn(out, tokenize(F.col(text_col)))
-
-
 def language_id(df: DataFrame, text_col: str = "text", out: str = "lang_pred") -> DataFrame:
     """Stopword-ratio language heuristic: the language whose function words
     cover the most tokens wins; below a floor → 'unk'.

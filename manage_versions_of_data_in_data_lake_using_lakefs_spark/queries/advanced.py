@@ -133,7 +133,7 @@ def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition runs as a broadcast nested-loop over 3 rows — no shuffle of
     the fact table at any scale."""
     li = load_table(spark, sf_dir, "lineitem")
-    tiers = local_df(spark, 
+    tiers = local_df(spark,
         [("low", 0.0, 10.0), ("mid", 10.0, 25.0), ("high", 25.0, 51.0)],
         "tier string, lo double, hi double",
     )

@@ -41,27 +41,36 @@ def local_df(spark, rows, schema) -> DataFrame:
     result frames in the bench paid it). Routing the same rows through a
     pandas frame makes the Arrow conversion build a LocalRelation the
     driver answers with no job at all (~30 ms), with bit-identical
-    schema and values (pinned by tests/test_local_df.py). Rows that are
-    not plain tuples/lists (Row objects, dict rows) and empty row lists
-    keep the classic path — correctness first, the fast path is only an
-    execution-strategy change."""
-    try:
-        data = rows if isinstance(rows, list) else list(rows)
-        if data and all(type(r) in (tuple, list) for r in data):
+    schema and values (pinned by tests/test_local_df.py). Arrow's
+    conversion would silently coerce a mistyped value (1.7 into a LONG
+    column becomes 1), so every row first passes the same type verifier
+    the classic path applies — a bad value raises on both paths. Rows
+    that are not plain tuples/lists (Row objects, dict rows) and empty
+    row lists keep the classic path — correctness first, the fast path
+    is only an execution-strategy change."""
+    from pyspark.sql.types import _make_type_verifier, _parse_datatype_string
+
+    data = rows if isinstance(rows, list) else list(rows)
+    ncols = len(data[0]) if data and type(data[0]) in (tuple, list) else 0
+    if ncols and all(type(r) in (tuple, list) and len(r) == ncols for r in data):
+        if isinstance(schema, str):
+            schema = _parse_datatype_string(schema)
+        verify = _make_type_verifier(schema)
+        for r in data:
+            verify(r)
+        try:
             import pandas as pd
 
-            ncols = len(data[0])
-            if ncols and all(len(r) == ncols for r in data):
-                pdf = pd.DataFrame(
-                    {
-                        i: pd.Series([r[i] for r in data], dtype=object)
-                        for i in range(ncols)
-                    }
-                )
-                return spark.createDataFrame(pdf, schema=schema)
-    except Exception:
-        pass
-    return spark.createDataFrame(rows, schema)
+            pdf = pd.DataFrame(
+                {
+                    i: pd.Series([r[i] for r in data], dtype=object)
+                    for i in range(ncols)
+                }
+            )
+            return spark.createDataFrame(pdf, schema=schema)
+        except Exception:
+            pass
+    return spark.createDataFrame(data, schema)
 
 _LIVE: list[DataFrame] = []
 

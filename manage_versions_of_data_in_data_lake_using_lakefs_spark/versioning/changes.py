@@ -180,7 +180,7 @@ def table_changes(
             # case (delete_where_dv / update_where_dv) skips the eager
             # revocation probe job entirely
             if survive and prev_pos is not None and not set(dv_prev) <= set(dv_cur):
-                surv_df = local_df(spark, 
+                surv_df = local_df(spark,
                     [(prefix + f,) for f in survive], schema="__lg_fp string"
                 )
                 revoked = prev_pos.join(

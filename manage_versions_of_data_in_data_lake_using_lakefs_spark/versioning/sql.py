@@ -7,12 +7,15 @@ same capabilities in SQL (``SELECT ... FROM t VERSION AS OF 3``,
 the engine's commit DAG so a user migrating Delta SQL scripts keeps them
 unchanged.
 
-Mechanics: time-travel clauses are recognized lexically and each pinned
-snapshot is registered as a temp view resolving through
-``LakeRepo.read_table`` — the rewritten query then runs through plain
-``spark.sql`` and Catalyst sees ordinary parquet scans (pruning/pushdown
-intact). This is a clause rewriter, not a SQL parser, but it is careful
-where lexical rewriters classically go wrong:
+Mechanics: DML (``MERGE INTO``, ``UPDATE``, ``DELETE FROM``) is parsed
+by Spark's own SQL parser — the typed plan gives each statement's
+structure, and every condition and value comes back as the user's exact
+text. Only table references on the SELECT side are rewritten lexically:
+each pinned snapshot is registered as a temp view resolving through
+``LakeRepo.read_table``, the rewritten query runs through plain
+``spark.sql``, and Catalyst sees ordinary parquet scans (pruning and
+pushdown intact). The rewrite is careful where lexical rewriters
+classically go wrong:
 
 - **string literals are masked first** ('...' with doubled-'' or
   backslash escapes, and "..." double-quoted literals — Spark's default
@@ -54,7 +57,8 @@ through ``LakeRepo.write_table`` and auto-commits one version (the
 ``upsert_table`` precedent), returning a one-row (table, version,
 rows_affected) summary. Inner SELECTs/conditions run through the full
 rewriter, so time travel inside DML (``INSERT INTO t SELECT * FROM t
-VERSION AS OF 0``) works. DELETE removes rows where the condition IS
+VERSION AS OF 0``, ``DELETE FROM t WHERE k IN (SELECT k FROM s@v1)``)
+works. DELETE removes rows where the condition IS
 TRUE — NULL-condition rows survive, ANSI semantics; UPDATE casts each
 assignment back to the column's existing type so the schema can't
 drift.
@@ -74,6 +78,7 @@ import re
 from contextlib import contextmanager
 from datetime import datetime, timezone
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -408,92 +413,6 @@ _DESCRIBE_TABLE_RE = re.compile(
     rf"^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?(?P<table>{_IDENT})\s*;?\s*$",
     re.IGNORECASE,
 )
-_MERGE_INTO_RE = re.compile(
-    rf"^\s*MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s+"
-    rf"(?P<table>{_IDENT})(?:\s+(?:AS\s+)?(?P<talias>(?!USING\b)\w+))?"
-    r"\s+USING\s+(?P<body>.+?)"
-    r"(?P<clauses>\s+WHEN\s+(?:NOT\s+)?MATCHED\b.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_MERGE_ON_RE = re.compile(
-    r"^\s*(?:(?:AS\s+)?(?!ON\b)(?P<salias>\w+)\s+)?ON\s+(?P<cond>.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-# MERGE clauses are split at top-level `WHEN [NOT] MATCHED` boundaries
-# (string literals masked first) and each segment must then FULLY match
-# exactly one anchored pattern — trailing garbage or an unsupported
-# clause shape raises instead of silently changing semantics (both
-# review-found failure modes of lazier spellings). The lookahead
-# disarms most `CASE WHEN matched ...` expressions over a column
-# literally named "matched": a boundary must be followed by AND, by
-# BY SOURCE, or by THEN + a merge ACTION keyword, so `WHEN matched
-# THEN 1` is not a boundary. Residual limitation (documented): `CASE
-# WHEN matched AND ...` still splits — the segment then fails the
-# anchored fullmatch and the statement is rejected LOUDLY with
-# "unsupported clause" (never a silent semantic change); backtick the
-# column or alias it to sidestep.
-_CLAUSE_BOUNDARY_RE = re.compile(
-    r"\bWHEN\s+(?:NOT\s+)?MATCHED\b"
-    r"(?=\s+(?:BY\s+SOURCE\b|AND\b|THEN\s+(?:UPDATE|DELETE|INSERT)\b))",
-    re.IGNORECASE,
-)
-_WHEN_MATCHED_UPDATE_RE = re.compile(
-    r"WHEN\s+MATCHED\s+(?:AND\s+(?P<cond>.+?)\s+)?THEN\s+UPDATE\s+SET\s+"
-    r"(?P<sets>.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_WHEN_MATCHED_DELETE_RE = re.compile(
-    r"WHEN\s+MATCHED\s+(?:AND\s+(?P<cond>.+?)\s+)?THEN\s+DELETE\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_WHEN_NOT_MATCHED_RE = re.compile(
-    r"WHEN\s+NOT\s+MATCHED\s+(?:AND\s+(?P<cond>.+?)\s+)?THEN\s+INSERT\s+"
-    r"(?:(?P<star>\*)|\(\s*(?P<cols>[^)]+?)\s*\)\s*VALUES\s*\("
-    r"(?P<vals>.+)\))\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_WHEN_NOT_MATCHED_BY_SOURCE_RE = re.compile(
-    r"WHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\s+(?:AND\s+(?P<cond>.+?)\s+)?"
-    r"THEN\s+DELETE\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_WHEN_NOT_MATCHED_BY_SOURCE_UPD_RE = re.compile(
-    r"WHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\s+(?:AND\s+(?P<cond>.+?)\s+)?"
-    r"THEN\s+UPDATE\s+SET\s+(?P<sets>.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
-def _split_merge_clauses(clauses: str) -> list[str]:
-    """Split a MERGE clause tail into its top-level WHEN segments.
-    Literals are masked so a string containing 'WHEN MATCHED' can't
-    start a clause; segments come back with literals restored."""
-    literals: list[str] = []
-
-    def mask(m: re.Match) -> str:
-        literals.append(m.group(0))
-        return f"\x00{len(literals) - 1}\x00"
-
-    masked = _LITERAL_RE.sub(mask, clauses)
-    starts = [m.start() for m in _CLAUSE_BOUNDARY_RE.finditer(masked)]
-    if not starts or masked[: starts[0]].strip():
-        raise ValueError(
-            f"MERGE: unsupported clause text (no recognized WHEN "
-            f"[NOT] MATCHED boundary) in {clauses!r}"
-        )
-    segs = []
-    for a, b in zip(starts, starts[1:] + [len(masked)]):
-        seg = _MASK_RE.sub(lambda m: literals[int(m.group(1))], masked[a:b])
-        segs.append(seg.strip())
-    return segs
-_EQ_PAIR_RE = re.compile(
-    r"^\s*(?P<la>\w+)\s*\.\s*(?P<lc>\w+|`[^`]+`)\s*=\s*"
-    r"(?P<ra>\w+)\s*\.\s*(?P<rc>\w+|`[^`]+`)\s*$"
-)
-_MERGE_ASSIGN_RE = re.compile(
-    r"^\s*(?P<col>(?:\w+\s*\.\s*)?(?:\w+|`[^`]+`))\s*=\s*(?P<expr>.+)$",
-    re.DOTALL,
-)
 _CTAS_RE = re.compile(
     rf"^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE\s+(?P<table>{_IDENT})\s+"
     r"(?:PARTITIONED\s+BY\s*\(\s*(?P<parts>[^()]+?)\s*\)\s+)?"
@@ -579,17 +498,6 @@ _INSERT_REPLACE_RE = re.compile(
     r"(?P<cond>.+?)\s+(?P<body>(?:SELECT|VALUES)\b.*?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-_DELETE_RE = re.compile(
-    rf"^\s*DELETE\s+FROM\s+(?P<table>{_IDENT})"
-    r"(?:\s+WHERE\s+(?P<cond>.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_UPDATE_RE = re.compile(
-    rf"^\s*UPDATE\s+(?P<table>{_IDENT})\s+SET\s+(?P<sets>.*?)"
-    r"(?:\s+WHERE\s+(?P<cond>.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_ASSIGN_RE = re.compile(rf"^\s*(?P<col>{_IDENT})\s*=\s*(?P<expr>.+)$", re.DOTALL)
 _CREATE_BRANCH_RE = re.compile(
     rf"^\s*CREATE\s+BRANCH\s+(?P<name>{_IDENT})(?:\s+FROM\s+(?P<src>{_IDENT}))?\s*;?\s*$",
     re.IGNORECASE,
@@ -631,16 +539,135 @@ _CHANGES_FEED_RE = re.compile(
 )
 
 
+def _mask(text: str, literals: list[str], rx: re.Pattern = _LITERAL_RE) -> str:
+    """Replace each ``rx`` match (string literals by default) with a
+    ``\\x00<i>\\x00`` placeholder, appending the matched text to
+    ``literals``; ``_unmask`` puts it back."""
+
+    def keep(m: re.Match) -> str:
+        literals.append(m.group(0))
+        return f"\x00{len(literals) - 1}\x00"
+
+    return rx.sub(keep, text)
+
+
+def _unmask(text: str, literals: list[str]) -> str:
+    return _MASK_RE.sub(lambda m: literals[int(m.group(1))], text)
+
+
+def _seq(s) -> list:
+    """A Scala ``Seq`` from the JVM as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+# expression nodes the parser wraps around a subquery plan
+_SUBQUERY_NODES = frozenset(
+    ("ScalarSubquery", "ListQuery", "Exists", "LateralSubquery")
+)
+
+
+def _node_span(query: str, node, is_plan: bool = False) -> tuple[int, int]:
+    """``(lo, hi)``, the inclusive character span of a node Spark's parser
+    built from ``query``: the smallest origin start and the largest stop
+    over the node and all its descendants, subquery plans included. A
+    node's own origin is not enough — ``k BETWEEN 1 AND 5`` reports only
+    ``BETWEEN 1 AND 5``. Origins that lie are skipped: shared singletons
+    (the ``true``/``false`` literals, window-frame case objects) keep the
+    origin of wherever the JVM first built them, and EXISTS carries its
+    enclosing clause's origin — its span is its subquery's, widened over
+    the ``EXISTS (`` … ``)`` around it. ``(len(query), -1)`` when no
+    origin is known."""
+    name = node.nodeName()
+    spans = [(len(query), -1)]
+    spans += [_node_span(query, c, is_plan) for c in _seq(node.children())]
+    if is_plan:
+        spans += [_node_span(query, e) for e in _seq(node.expressions())]
+    elif name in _SUBQUERY_NODES:
+        lo, hi = _node_span(query, node.plan(), True)
+        if name == "Exists":
+            opens = 0
+            while query[lo - 1] in "( \t\r\n":
+                lo -= 1
+                opens += query[lo] == "("
+            while opens:
+                hi += 1
+                opens -= query[hi] == ")"
+            lo -= len("EXISTS")
+        spans.append((lo, hi))
+    shared = name.endswith("$") or (
+        name == "Literal" and node.sql() in ("true", "false")
+    )
+    if name != "Exists" and not shared:
+        ctx = node.origin().context()
+        start = ctx.startIndex()
+        if start >= 0:
+            spans.append((start, ctx.stopIndex()))
+    return min(lo for lo, _ in spans), max(hi for _, hi in spans)
+
+
+def _node_text(query: str, node, is_plan: bool = False) -> str:
+    """The user's exact text of a parsed node (``_node_span``); a bare
+    ``true``/``false`` literal has no trustworthy origin and is spelled by
+    Spark itself."""
+    lo, hi = _node_span(query, node, is_plan)
+    return query[lo : hi + 1] if lo <= hi else node.sql()
+
+
+def _unalias(plan) -> tuple:
+    """(relation, alias or None) of a parsed DML target or source."""
+    if plan.nodeName() == "SubqueryAlias":
+        return plan.child(), plan.alias()
+    return plan, None
+
+
+def _table_name(relation) -> str:
+    return ".".join(_seq(relation.multipartIdentifier()))
+
+
+def _column_name(attr, qualifier: str) -> str:
+    """The column a parsed SET/INSERT key names; a leading ``qualifier.``
+    (the target's alias) is dropped."""
+    parts = _seq(attr.nameParts())
+    if len(parts) == 2 and parts[0].lower() == qualifier.lower():
+        parts = parts[1:]
+    return ".".join(parts)
+
+
+def _check_assignable(stmt: str, table: str, col: str, id_cols: dict) -> None:
+    """SET never targets an IDENTITY column, ALWAYS or BY DEFAULT."""
+    entry = id_cols.get(col.lower())
+    if entry is not None:
+        mode = "ALWAYS" if entry.get("always", True) else "BY DEFAULT"
+        raise ValueError(
+            f"{stmt} {table!r}: column {col!r} is GENERATED {mode} AS "
+            "IDENTITY — identity columns are never assignable"
+        )
+
+
+def _dml_parse_error(e: ParseException) -> ValueError:
+    cond = e.getCondition() or ""
+    if cond.startswith("NON_LAST_"):
+        # NON_LAST_<kind>_CLAUSE_OMIT_CONDITION
+        kind = cond[len("NON_LAST_") : -len("_CLAUSE_OMIT_CONDITION")]
+        return ValueError(
+            f"MERGE: with multiple WHEN {kind.replace('_', ' ')} clauses, "
+            "all but the last must have a condition (Delta's ordered-"
+            "evaluation rule — an unconditional earlier clause would "
+            "shadow the rest)"
+        )
+    if cond == "_LEGACY_ERROR_TEMP_0006":
+        return ValueError(
+            "MERGE INSERT: the clause names columns but a different "
+            "number of VALUES expressions"
+        )
+    return ValueError(f"unsupported MERGE/UPDATE/DELETE statement: {str(e).strip()}")
+
+
 def _split_top_level(s: str) -> list[str]:
     """Split a SET list on top-level commas: literals masked first, paren
     depth tracked — ``a = f(x, y), b = 'p,q'`` is two assignments."""
     literals: list[str] = []
-
-    def mask(m: re.Match) -> str:
-        literals.append(m.group(0))
-        return f"\x00{len(literals) - 1}\x00"
-
-    masked = _LITERAL_RE.sub(mask, s)
+    masked = _mask(s, literals)
     parts, depth, cur = [], 0, []
     for ch in masked:
         if ch in "([":
@@ -653,7 +680,7 @@ def _split_top_level(s: str) -> list[str]:
         else:
             cur.append(ch)
     parts.append("".join(cur))
-    return [_MASK_RE.sub(lambda m: literals[int(m.group(1))], p).strip() for p in parts]
+    return [_unmask(p, literals).strip() for p in parts]
 
 
 def _split_coldefs(s: str) -> list[str]:
@@ -668,12 +695,7 @@ def _split_coldefs(s: str) -> list[str]:
     (``DEFAULT 1<2`` or ``DEFAULT 1 < 2``) never unbalances the scan
     (r12 advice: the glued-word rule ate ``DEFAULT 1<2, b INT``)."""
     literals: list[str] = []
-
-    def mask(m: re.Match) -> str:
-        literals.append(m.group(0))
-        return f"\x00{len(literals) - 1}\x00"
-
-    masked = _LITERAL_RE.sub(mask, s)
+    masked = _mask(s, literals)
     parts, depth, angle, cur = [], 0, 0, []
     # '<' opens a generic-type bracket ONLY after a complex-type keyword
     # (ARRAY<...>, MAP<...>, STRUCT<...>); a '<' after anything else is a
@@ -706,10 +728,7 @@ def _split_coldefs(s: str) -> list[str]:
             if not ch.isspace():
                 last_word = ""
     parts.append("".join(cur))
-    return [
-        _MASK_RE.sub(lambda m: literals[int(m.group(1))], p).strip()
-        for p in parts
-    ]
+    return [_unmask(p, literals).strip() for p in parts]
 
 
 def _identity_clause(ent: dict) -> str:
@@ -925,7 +944,7 @@ class LakeSQL:
                     )
                 )
         rows.reverse()
-        return local_df(self.spark, 
+        return local_df(self.spark,
             rows,
             "version INT, commit_id STRING, timestamp TIMESTAMP, "
             "operation STRING, message STRING, branch STRING",
@@ -970,7 +989,7 @@ class LakeSQL:
             int(last.version),
             last.timestamp,
         )
-        return local_df(self.spark, 
+        return local_df(self.spark,
             [row],
             "name STRING, format STRING, branch STRING, numFiles BIGINT, "
             "sizeInBytes BIGINT, version INT, lastModified TIMESTAMP",
@@ -1015,7 +1034,7 @@ class LakeSQL:
             where=where,
         )
         head = self.repo.head(self.branch)
-        return local_df(self.spark, 
+        return local_df(self.spark,
             [(name, c.version, len(head.tables[name]))],
             "table STRING, version INT, file_groups INT",
         )
@@ -1260,7 +1279,7 @@ class LakeSQL:
             loaded[rp] = sig
             new.append(p)
         if not new:
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 [(0, 0, skipped)],
                 "num_inserted_rows LONG, num_loaded_files INT, "
                 "num_skipped_files INT",
@@ -1352,7 +1371,7 @@ class LakeSQL:
                     self.branch,
                     f"SQL: COPY INTO {name} ({len(new)} files, {rows} rows)",
                 )
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 [(rows, len(new), skipped)],
                 "num_inserted_rows LONG, num_loaded_files INT, "
                 "num_skipped_files INT",
@@ -1390,7 +1409,7 @@ class LakeSQL:
                 )
         finally:
             cached.unpersist(blocking=False)
-        return local_df(self.spark, 
+        return local_df(self.spark,
             [(rows, len(new), skipped)],
             "num_inserted_rows LONG, num_loaded_files INT, "
             "num_skipped_files INT",
@@ -1434,7 +1453,7 @@ class LakeSQL:
                             st.get("rows"),
                         )
                     )
-        return local_df(self.spark, 
+        return local_df(self.spark,
             rows,
             "file STRING, column STRING, min STRING, max STRING, "
             "null_count BIGINT, row_count BIGINT",
@@ -1537,7 +1556,7 @@ class LakeSQL:
                 if n_rows is None:
                     n_rows = scan().count()
                 rows.append(("row_count", str(n_rows)))
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 rows, "statistic STRING, value STRING"
             )
 
@@ -1625,20 +1644,13 @@ class LakeSQL:
                 )
         order = {c: i for i, c in enumerate(cols)}
         out_rows.sort(key=lambda t: order[t[0]])
-        return local_df(self.spark, 
+        return local_df(self.spark,
             out_rows,
             "column STRING, min STRING, max STRING, null_count BIGINT, "
             "row_count BIGINT, source STRING",
         )
 
-    def _merge_into(
-        self,
-        table: str,
-        talias: str | None,
-        body: str,
-        clauses: str,
-        evolve: bool = False,
-    ) -> DataFrame:
+    def _merge_into(self, query: str, plan) -> DataFrame:
         """``MERGE INTO t [AS a] USING <table|(SELECT ...)> [AS b]
         ON a.k = b.k [AND ...]
         [WHEN MATCHED [AND cond] THEN UPDATE SET * | SET c = expr, ... | DELETE]...
@@ -1647,8 +1659,9 @@ class LakeSQL:
         — SEVERAL clauses of each kind are legal (Delta's full 2.4
         grammar): they evaluate in statement order, the first clause
         whose condition passes acts on the row, and all but the last
-        clause of a kind must carry a condition. Anything left
-        unconsumed raises instead of silently changing semantics.
+        clause of a kind must carry a condition. ``plan`` is Spark's
+        parsed ``MergeIntoTable`` for ``query``; the grammar (clause
+        order, the condition rule, INSERT arity) is Spark's own.
 
         The Delta MERGE surface a lakehouse actually runs: equality-
         conjunction ON, ordered update/delete clauses on match
@@ -1667,46 +1680,19 @@ class LakeSQL:
         against source keys that actually match a target row, so
         duplicate never-matching keys (a legal multi-row insert)
         pass."""
-        name = self._resolve_table(table)
+        rel, talias = _unalias(plan.targetTable())
+        name = self._resolve_table(_table_name(rel))
         ta = talias or name
-        # split body = "<src> [alias] ON <cond>": a parenthesized source is
-        # scanned for its balanced close (its own JOIN ... ON must not be
-        # mistaken for the merge condition)
-        body = body.strip()
-        if body.startswith("("):
-            depth = 0
-            end = -1
-            for i, ch in enumerate(body):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        end = i
-                        break
-            if end < 0:
-                raise ValueError(f"unbalanced parens in MERGE source: {body!r}")
-            src_text, rest = body[: end + 1], body[end + 1 :]
-            mo = _MERGE_ON_RE.match(rest)
-            if not mo:
-                raise ValueError(f"cannot parse MERGE USING ... ON from: {rest!r}")
-            sdf = self.sql(src_text[1:-1])
-            sa = mo.group("salias")
-            if not sa:
-                raise ValueError("a subquery MERGE source needs an alias")
-        else:
-            mi_ = re.match(rf"^({_IDENT})(.*)$", body, re.DOTALL)
-            if not mi_:
-                raise ValueError(f"cannot parse MERGE source: {body!r}")
-            src_name = mi_.group(1).strip("`")
-            mo = _MERGE_ON_RE.match(mi_.group(2))
-            if not mo:
-                raise ValueError(
-                    f"cannot parse MERGE USING ... ON from: {mi_.group(2)!r}"
-                )
+        evolve = plan.withSchemaEvolution()
+        src, sa = _unalias(plan.sourceTable())
+        if src.nodeName() == "UnresolvedRelation":
+            src_name = _table_name(src)
             sdf = self.sql(f"SELECT * FROM {src_name}")
-            sa = mo.group("salias") or src_name
-        cond = mo.group("cond")
+            sa = sa or src_name
+        elif sa is None:
+            raise ValueError("a subquery MERGE source needs an alias")
+        else:
+            sdf = self.sql(_node_text(query, src, is_plan=True))
         # the lateral __lg_cl clause-index alias (and the DV route's
         # lineage columns) live in the reserved __lg_ namespace; a
         # source or target column there would SHADOW the alias at
@@ -1724,82 +1710,58 @@ class LakeSQL:
         # equality-conjunction ON, sides identified by alias
         t_keys: list[str] = []
         s_keys: list[str] = []
-        for part in re.split(r"\bAND\b", cond, flags=re.IGNORECASE):
-            pm = _EQ_PAIR_RE.match(part)
-            if not pm:
+        terms = [plan.mergeCondition()]
+        while terms:
+            term = terms.pop()
+            if term.nodeName() == "And":
+                terms += [term.right(), term.left()]
+                continue
+            sides = [term.left(), term.right()] if term.nodeName() == "EqualTo" else []
+            parts = [
+                _seq(x.nameParts())
+                for x in sides
+                if x.nodeName() == "UnresolvedAttribute"
+            ]
+            if len(parts) != 2 or any(len(p) != 2 for p in parts):
                 raise ValueError(
                     f"MERGE ON must be an equality conjunction of "
-                    f"alias.col = alias.col terms; got {part.strip()!r}"
+                    f"alias.col = alias.col terms; got "
+                    f"{_node_text(query, term)!r}"
                 )
-            la, lc, ra, rc = (
-                pm.group("la"),
-                pm.group("lc").strip("`"),
-                pm.group("ra"),
-                pm.group("rc").strip("`"),
-            )
-            if la.lower() == ta.lower() and ra.lower() == sa.lower():
-                t_keys.append(lc)
-                s_keys.append(rc)
-            elif la.lower() == sa.lower() and ra.lower() == ta.lower():
-                t_keys.append(rc)
-                s_keys.append(lc)
-            else:
+            (la, lc), (ra, rc) = parts
+            if la.lower() == sa.lower() and ra.lower() == ta.lower():
+                (la, lc), (ra, rc) = (ra, rc), (la, lc)
+            if la.lower() != ta.lower() or ra.lower() != sa.lower():
                 raise ValueError(
-                    f"MERGE ON term {part.strip()!r} must relate "
+                    f"MERGE ON term {_node_text(query, term)!r} must relate "
                     f"{ta!r} and {sa!r}"
                 )
-        # Clauses collect IN ORDER per kind (Delta r11 semantics: several
-        # clauses of a kind are legal, evaluated in order — the FIRST
-        # clause whose condition passes acts on the row; every clause
-        # except the last of its kind must carry a condition, or the
-        # unconditional earlier clause would shadow the rest).
-        m_raw: list[tuple[str | None, str, re.Match]] = []   # matched
-        i_raw: list[tuple[str | None, re.Match]] = []        # not matched
-        bs_raw: list[tuple[str | None, str, re.Match]] = []  # by source
-        for seg in _split_merge_clauses(clauses):
-            for kind, rx in (
-                ("bsd", _WHEN_NOT_MATCHED_BY_SOURCE_RE),
-                ("bsu", _WHEN_NOT_MATCHED_BY_SOURCE_UPD_RE),
-                ("mu", _WHEN_MATCHED_UPDATE_RE),
-                ("md", _WHEN_MATCHED_DELETE_RE),
-                ("mi", _WHEN_NOT_MATCHED_RE),
-            ):
-                m = rx.fullmatch(seg)
-                if m:
-                    cond = m.group("cond")
-                    if kind in ("mu", "md"):
-                        m_raw.append(
-                            (cond, "update" if kind == "mu" else "delete", m)
-                        )
-                    elif kind == "mi":
-                        i_raw.append((cond, m))
-                    else:
-                        bs_raw.append(
-                            (cond, "update" if kind == "bsu" else "delete", m)
-                        )
-                    break
-            else:
-                raise ValueError(
-                    f"MERGE: unsupported clause {seg!r} — supported: WHEN "
-                    f"MATCHED [AND c] THEN UPDATE SET ...|DELETE, WHEN NOT "
-                    f"MATCHED [AND c] THEN INSERT *|(cols) VALUES (...), "
-                    f"WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET "
-                    f"...|DELETE — several of a kind allowed, evaluated "
-                    f"in order"
+            t_keys.append(lc)
+            s_keys.append(rc)
+
+        def actions(seq) -> list[tuple[str | None, str, object]]:
+            """(condition text, "update"|"delete"|"insert", body) per
+            parsed clause, in statement order; body is None for DELETE,
+            "*" for SET * / INSERT *, else [(column, value text)]."""
+            out = []
+            for a in _seq(seq):
+                c, kind = a.condition(), a.nodeName()
+                cond = _node_text(query, c.get()) if c.isDefined() else None
+                body = (
+                    None if kind == "DeleteAction"
+                    else "*" if kind.endswith("StarAction")
+                    else [
+                        (_column_name(x.key(), ta), _node_text(query, x.value()))
+                        for x in _seq(a.assignments())
+                    ]
                 )
-        for label, entries in (
-            ("WHEN MATCHED", [c for c, _a, _m in m_raw]),
-            ("WHEN NOT MATCHED", [c for c, _m in i_raw]),
-            ("WHEN NOT MATCHED BY SOURCE", [c for c, _a, _m in bs_raw]),
-        ):
-            for cond in entries[:-1]:
-                if cond is None:
-                    raise ValueError(
-                        f"MERGE: with multiple {label} clauses, all but "
-                        f"the last must have a condition (Delta's ordered-"
-                        f"evaluation rule — an unconditional earlier "
-                        f"clause would shadow the rest)"
-                    )
+                action = kind.removesuffix("Action").removesuffix("Star")
+                out.append((cond, action.lower(), body))
+            return out
+
+        m_raw = actions(plan.matchedActions())
+        i_raw = actions(plan.notMatchedActions())
+        bs_raw = actions(plan.notMatchedBySourceActions())
 
         target = self.repo.read_table(
             self.spark, name, ref=self.branch, include_staged=True
@@ -1832,37 +1794,17 @@ class LakeSQL:
             # old-columns-only) merge leaves the schema — and the DV
             # route eligibility — untouched even when the source
             # carries extra columns (r11 review).
-            star_used = any(
-                a == "update" and m.group("sets").strip() == "*"
-                for _c, a, m in m_raw
-            ) or any(m.group("star") for _c, m in i_raw)
-            named: set[str] = set()
-            if not star_used:
-                for _c, a, m in m_raw + bs_raw:
-                    if a != "update":
-                        continue
-                    for part in _split_top_level(m.group("sets")):
-                        am = _MERGE_ASSIGN_RE.match(part)
-                        if am:
-                            col = am.group("col").strip("`")
-                            qual = re.match(
-                                rf"^{re.escape(ta)}\s*\.\s*(.+)$",
-                                col,
-                                re.IGNORECASE,
-                            )
-                            if qual:
-                                col = qual.group(1).strip("`")
-                            named.add(col.lower())
-                for _c, m in i_raw:
-                    if not m.group("star"):
-                        named.update(
-                            c.strip().strip("`").lower()
-                            for c in _split_top_level(m.group("cols"))
-                        )
+            star_used = any(b == "*" for _c, _a, b in m_raw + i_raw)
+            named_cols = {
+                col.lower()
+                for _c, _a, b in m_raw + bs_raw + i_raw
+                if isinstance(b, list)
+                for col, _v in b
+            }
             new_fields = [
                 f
                 for f in candidates
-                if star_used or f.name.lower() in named
+                if star_used or f.name.lower() in named_cols
             ]
             if new_fields:
                 target = target.select(
@@ -1898,80 +1840,51 @@ class LakeSQL:
                 f"them before merging"
             )
 
-        def _parse_assigns(sets_text: str) -> dict[str, str]:
+        def _resolve_assigns(pairs: list[tuple[str, str]]) -> dict[str, str]:
             out: dict[str, str] = {}
-            for part in _split_top_level(sets_text):
-                am = _MERGE_ASSIGN_RE.match(part)
-                if not am:
-                    raise ValueError(f"cannot parse SET assignment: {part!r}")
-                col = am.group("col").strip("`")
-                qual = re.match(
-                    rf"^{re.escape(ta)}\s*\.\s*(.+)$", col, re.IGNORECASE
-                )
-                if qual:
-                    col = qual.group(1).strip("`")
+            for col, expr in pairs:
                 if col.lower() not in resolved:
                     raise KeyError(f"MERGE {name!r}: no column {col!r}")
-                if col.lower() in id_cols:
-                    mode = (
-                        "ALWAYS"
-                        if id_cols[col.lower()].get("always", True)
-                        else "BY DEFAULT"
-                    )
-                    raise ValueError(
-                        f"MERGE {name!r}: column {col!r} is GENERATED "
-                        f"{mode} AS IDENTITY — identity columns are "
-                        "never assignable"
-                    )
-                out[resolved[col.lower()]] = am.group("expr").strip()
+                _check_assignable("MERGE", name, col, id_cols)
+                out[resolved[col.lower()]] = expr
             return out
 
-        # SET assignments and INSERT column lists parse up front (the
+        # SET assignments and INSERT column lists resolve up front (the
         # deletion-vector route needs them before any view exists); a
         # typo'd SET/INSERT column raises here regardless of which
         # execution path runs. Clause lists carry (cond, action,
         # col->expr) in statement order.
         m_clauses: list[tuple[str | None, str, dict[str, str] | None]] = []
-        for cond, action, m in m_raw:
-            if action == "update":
-                sets_text = m.group("sets").strip()
-                if sets_text == "*":
-                    assigns = {
-                        f.name: f"{sa}.`{f.name}`"
-                        for f in target.schema.fields
-                        # with evolution, SET * updates only the
-                        # source-named columns (target-only columns keep
-                        # their values); without it, the strict contract
-                        # stands — a source lacking a target column is a
-                        # loud analysis error. IDENTITY columns are
-                        # excluded either way: matched rows keep their
-                        # allocated values (they are never assignable)
-                        if (not evolve or f.name.lower() in src_lower)
-                        and f.name.lower() not in id_cols
-                    }
-                else:
-                    assigns = _parse_assigns(sets_text)
-                m_clauses.append((cond, "update", assigns))
-            else:
-                m_clauses.append((cond, "delete", None))
-        bs_clauses: list[tuple[str | None, str, dict[str, str] | None]] = []
-        for cond, action, m in bs_raw:
-            if action == "update":
-                sets_text = m.group("sets").strip()
-                if sets_text == "*":
-                    raise ValueError(
-                        "MERGE BY SOURCE UPDATE: SET * needs a source row "
-                        "— name target columns explicitly"
-                    )
-                bs_clauses.append((cond, "update", _parse_assigns(sets_text)))
-            else:
-                bs_clauses.append((cond, "delete", None))
+        for cond, action, body in m_raw:
+            if body == "*":
+                body = {
+                    f.name: f"{sa}.`{f.name}`"
+                    for f in target.schema.fields
+                    # with evolution, SET * updates only the
+                    # source-named columns (target-only columns keep
+                    # their values); without it, the strict contract
+                    # stands — a source lacking a target column is a
+                    # loud analysis error. IDENTITY columns are
+                    # excluded either way: matched rows keep their
+                    # allocated values (they are never assignable)
+                    if (not evolve or f.name.lower() in src_lower)
+                    and f.name.lower() not in id_cols
+                }
+            elif body is not None:
+                body = _resolve_assigns(body)
+            m_clauses.append((cond, action, body))
+        # BY SOURCE UPDATE SET * is no Spark grammar (there is no source
+        # row), so every by-source body is an explicit list or None
+        bs_clauses = [
+            (cond, action, body and _resolve_assigns(body))
+            for cond, action, body in bs_raw
+        ]
         # insert exprs evaluate in SOURCE scope (the anti join of source
         # against target); unnamed target columns insert as NULL
         # (Delta's explicit-column INSERT rule)
         i_clauses: list[tuple[str | None, dict[str, str]]] = []
-        for cond, m in i_raw:
-            if m.group("star"):
+        for cond, _action, body in i_raw:
+            if body == "*":
                 id_clash = sorted(id_always & src_lower)
                 if id_clash:
                     # the other paths (INSERT lists, COPY INTO) refuse a
@@ -1985,26 +1898,9 @@ class LakeSQL:
                         "USING source"
                     )
                 i_provided.append((set(id_cols) - id_always) & src_lower)
-                if evolve:
-                    # automerge: target-only columns insert their
-                    # DEFAULT when declared (r12), else NULL; IDENTITY
-                    # columns are engine-allocated after the union
-                    # (except BY DEFAULT ones the source provides)
-                    exprs = {
-                        f.name: (
-                            "NULL"
-                            if f.name.lower() in id_cols
-                            and f.name.lower() not in i_provided[-1]
-                            else f"{sa}.`{f.name}`"
-                            if f.name.lower() in src_lower
-                            else col_defaults.get(f.name.lower(), "NULL")
-                        )
-                        for f in target.schema.fields
-                    }
-                else:
-                    # case-insensitive, like Spark's own resolution (and
-                    # the evolve branch above); IDENTITY columns are
-                    # never expected from the source
+                if not evolve:
+                    # case-insensitive, like Spark's own resolution;
+                    # IDENTITY columns are never expected from the source
                     missing = [
                         f.name
                         for f in target.schema.fields
@@ -2016,33 +1912,24 @@ class LakeSQL:
                             f"MERGE INSERT *: source lacks target columns "
                             f"{missing}"
                         )
-                    exprs = {
-                        f.name: (
-                            "NULL"
-                            if f.name.lower() in id_cols
-                            and f.name.lower() not in i_provided[-1]
-                            else f"{sa}.`{f.name}`"
-                        )
-                        for f in target.schema.fields
-                    }
+                # automerge: target-only columns insert their DEFAULT when
+                # declared (r12), else NULL — without evolution none
+                # exist; IDENTITY columns are engine-allocated after the
+                # union (except BY DEFAULT ones the source provides)
+                exprs = {
+                    f.name: (
+                        "NULL"
+                        if f.name.lower() in id_cols
+                        and f.name.lower() not in i_provided[-1]
+                        else f"{sa}.`{f.name}`"
+                        if f.name.lower() in src_lower
+                        else col_defaults.get(f.name.lower(), "NULL")
+                    )
+                    for f in target.schema.fields
+                }
             else:
-                cols = [
-                    c.strip() for c in _split_top_level(m.group("cols"))
-                ]
-                vals = _split_top_level(m.group("vals"))
-                if len(cols) != len(vals):
-                    raise ValueError(
-                        f"MERGE INSERT: {len(cols)} columns but "
-                        f"{len(vals)} VALUES expressions"
-                    )
                 named: dict[str, str] = {}
-                for c, v in zip(cols, vals):
-                    col = c.strip("`")
-                    qual = re.match(
-                        rf"^{re.escape(ta)}\s*\.\s*(.+)$", col, re.IGNORECASE
-                    )
-                    if qual:
-                        col = qual.group(1).strip("`")
+                for col, v in body:
                     if col.lower() not in resolved:
                         raise KeyError(f"MERGE {name!r}: no column {col!r}")
                     if col.lower() in id_always:
@@ -2541,13 +2428,13 @@ class LakeSQL:
             collist = (
                 " (" + ", ".join(vdef["cols"]) + ")" if vdef.get("cols") else ""
             )
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 [(f"CREATE VIEW {low}{collist} AS {vdef['sql']};",)],
                 "createtab_stmt STRING",
             )
         name = self._resolve_table(table)
         stmts = self._create_table_script(name, name)
-        return local_df(self.spark, 
+        return local_df(self.spark,
             [(";\n".join(stmts) + ";",)], "createtab_stmt STRING"
         )
 
@@ -2850,8 +2737,15 @@ class LakeSQL:
     # -- DML (Delta-style SQL writes; auto-commit like upsert_table) -------
 
     def _dml_result(self, table: str, version: int, rows: int) -> DataFrame:
-        return local_df(self.spark, 
+        return local_df(self.spark,
             [(table, version, rows)], "table STRING, version INT, rows_affected BIGINT"
+        )
+
+    def _commit_result(self, c) -> DataFrame:
+        return local_df(
+            self.spark,
+            [(c.version, c.id, c.message)],
+            "version INT, commit_id STRING, message STRING",
         )
 
     def _written_rows(self, rel: str, df: DataFrame) -> int:
@@ -3507,7 +3401,7 @@ class LakeSQL:
                 raise
         finally:
             cached.unpersist(blocking=False)
-        return local_df(self.spark, 
+        return local_df(self.spark,
             [(name, c.version, int(deleted), int(n_ins))],
             "table STRING, version INT, num_deleted LONG, "
             "num_inserted LONG",
@@ -3553,6 +3447,44 @@ class LakeSQL:
         if not safe:
             return None
         return safe, cand, info
+
+    def _dml(self, query: str) -> DataFrame:
+        """MERGE INTO / UPDATE / DELETE FROM, parsed by Spark's own SQL
+        parser. The typed plan gives the target, the source, the ON
+        pairs and the ordered clause actions; each condition and value
+        is the user's exact text (``_node_text``) for every route
+        (deletion vectors, stats-pruned, full rewrite) to consume. The ``t@vN`` shorthand is not Spark grammar, so it is
+        spelled ``t VERSION AS OF N`` (outside string literals) before
+        parsing; the rewriter resolves that spelling wherever the text
+        later runs."""
+        literals: list[str] = []
+        masked = _AT_RE.sub(r"\g<table> VERSION AS OF \g<ver>", _mask(query, literals))
+        query = _unmask(masked, literals)
+        parser = self.spark._jsparkSession.sessionState().sqlParser()
+        try:
+            plan = parser.parsePlan(query)
+        except ParseException as e:
+            raise _dml_parse_error(e) from None
+        kind = plan.nodeName()
+        if kind == "MergeIntoTable":
+            return self._merge_into(query, plan)
+        rel, alias = _unalias(plan.table())
+        if alias:
+            raise ValueError("UPDATE/DELETE: a target table alias is not supported")
+        table = _table_name(rel)
+        cond = plan.condition()
+        if kind == "DeleteFromTable":
+            # no WHERE parses to a bare TRUE literal: every row goes
+            return self._delete(
+                table, None if cond.sql() == "true" else _node_text(query, cond)
+            )
+        sets = [  # UpdateTable
+            (_column_name(a.key(), table), _node_text(query, a.value()))
+            for a in _seq(plan.assignments())
+        ]
+        return self._update(
+            table, sets, _node_text(query, cond.get()) if cond.isDefined() else None
+        )
 
     def _delete(self, table: str, cond: str | None) -> DataFrame:
         """DELETE FROM t [WHERE cond] — rows where cond IS TRUE are
@@ -3920,7 +3852,9 @@ class LakeSQL:
         c = self.repo.commit(self.branch, f"SQL: DELETE FROM {name}")
         return self._dml_result(name, c.version, before - kept_n)
 
-    def _update(self, table: str, sets: str, cond: str | None) -> DataFrame:
+    def _update(
+        self, table: str, sets: list[tuple[str, str]], cond: str | None
+    ) -> DataFrame:
         """UPDATE t SET c = expr, ... [WHERE cond] — rewritten as one
         projection (CASE WHEN cond IS TRUE THEN expr ELSE c END, cast
         back to the column's type so the table schema never drifts).
@@ -3934,11 +3868,7 @@ class LakeSQL:
         )
         resolved = {f.name.lower(): f.name for f in target.schema.fields}
         assigns: dict[str, str] = {}
-        for part in _split_top_level(sets):
-            m = _ASSIGN_RE.match(part)
-            if not m:
-                raise ValueError(f"cannot parse SET assignment: {part!r}")
-            col = m.group("col")
+        for col, expr in sets:
             if col.lower() not in resolved:
                 raise KeyError(f"UPDATE {name!r}: no column {col!r}")
             if col.lower() in gen_cols:
@@ -3946,18 +3876,8 @@ class LakeSQL:
                     f"UPDATE {name!r}: column {col!r} is GENERATED and "
                     "recomputed on read; update its source columns instead"
                 )
-            if col.lower() in id_cols:
-                mode = (
-                    "ALWAYS"
-                    if id_cols[col.lower()].get("always", True)
-                    else "BY DEFAULT"
-                )
-                raise ValueError(
-                    f"UPDATE {name!r}: column {col!r} is GENERATED "
-                    f"{mode} AS IDENTITY — identity columns are never "
-                    "assignable"
-                )
-            assigns[resolved[col.lower()]] = m.group("expr").strip()
+            _check_assignable("UPDATE", name, col, id_cols)
+            assigns[resolved[col.lower()]] = expr
         if (
             cond is not None
             and self._dv_enabled(name)
@@ -4048,10 +3968,7 @@ class LakeSQL:
             c = self.repo.restore_table(
                 self.branch, self._resolve_table(m.group("table")), ver
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _OPTIMIZE_RE.match(query)
         if m:
             return self._optimize(
@@ -4072,10 +3989,7 @@ class LakeSQL:
             c = self.repo.purge_deletion_vectors(
                 self.spark, self.branch, self._resolve_table(m.group("table"))
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _DESCRIBE_STATS_RE.match(query)
         if m:
             return self.describe_stats(m.group("table"))
@@ -4099,10 +4013,7 @@ class LakeSQL:
                 self._resolve_table(m.group("table")),
                 _parse_prop_pairs(m.group("pairs")),
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _UNSET_TBLPROPS_RE.match(query)
         if m:
             c = self.repo.unset_table_properties(
@@ -4111,10 +4022,7 @@ class LakeSQL:
                 _parse_prop_keys(m.group("keys")),
                 if_exists=bool(m.group("ifex")),
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _SHOW_TBLPROPS_RE.match(query)
         if m:
             props = self.repo.table_properties(
@@ -4138,7 +4046,7 @@ class LakeSQL:
                     if key is not None
                     else sorted(props.items())
                 )
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 rows, "key STRING, value STRING"
             )
         m = _ADD_CONSTRAINT_RE.match(query)
@@ -4150,19 +4058,13 @@ class LakeSQL:
                 m.group("name"),
                 m.group("expr"),
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _DROP_CONSTRAINT_RE.match(query)
         if m:
             c = self.repo.drop_constraint(
                 self.branch, self._resolve_table(m.group("table")), m.group("name")
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         copy_sel = _parse_copy_select(query)
         m = None if copy_sel else _COPY_TABLE_TO_RE.match(query)
         if copy_sel or m:
@@ -4197,7 +4099,7 @@ class LakeSQL:
                     write_parquet(out, path)
             finally:
                 out.unpersist(blocking=False)
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 [(path, fmt, rows)], "path STRING, format STRING, rows_copied LONG"
             )
         m = _COPY_INTO_RE.match(query)
@@ -4226,10 +4128,7 @@ class LakeSQL:
                 c = self.repo.deep_clone_table(self.spark, self.branch, src, dst)
             else:
                 c = self.repo.clone_table(self.branch, src, dst)
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _TRUNCATE_RE.match(query)
         if m:
             name = self._resolve_table(m.group("table"))
@@ -4295,10 +4194,7 @@ class LakeSQL:
                 cols=cols,
                 alter=is_alter,
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _RENAME_TABLE_RE.match(query)
         if m:
             c = self.repo.rename_table(
@@ -4306,17 +4202,11 @@ class LakeSQL:
                 self._resolve_table(m.group("old")),
                 m.group("new").lower(),
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _DROP_VIEW_RE.match(query)
         if m:
             c = self.repo.drop_view(self.branch, m.group("name"))
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         if _SHOW_VIEWS_RE.match(query):
             rows = []
             for n in self.repo.list_view_names(self.branch):
@@ -4324,7 +4214,7 @@ class LakeSQL:
                 rows.append(
                     (n, d["sql"], ", ".join(d.get("cols") or []) or None)
                 )
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 rows, "view_name STRING, view_text STRING, view_cols STRING"
             )
         m = _SHOW_CREATE_RE.match(query)
@@ -4342,10 +4232,7 @@ class LakeSQL:
                 step=int(m.group("step") or m.group("step2") or 1),
                 always=m.group("mode").upper() == "ALWAYS",
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _ALTER_CLUSTER_RE.match(query)
         if m:
             c = self.repo.alter_cluster_by(
@@ -4358,10 +4245,7 @@ class LakeSQL:
                     s.strip(" `") for s in m.group("cols").split(",")
                 ],
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _WIDEN_COLUMN_RE.match(query)
         if m:
             c = self.repo.alter_widen_column(
@@ -4371,19 +4255,13 @@ class LakeSQL:
                 m.group("col"),
                 m.group("type"),
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _SYNC_IDENTITY_RE.match(query)
         if m:
             c = self.repo.sync_identity(
                 self.spark, self.branch, self._resolve_table(m.group("table"))
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _SET_DEFAULT_RE.match(query)
         if m:
             c = self.repo.alter_set_default(
@@ -4393,10 +4271,7 @@ class LakeSQL:
                 m.group("col"),
                 m.group("expr"),
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _DROP_DEFAULT_RE.match(query)
         if m:
             c = self.repo.alter_drop_default(
@@ -4404,10 +4279,7 @@ class LakeSQL:
                 self._resolve_table(m.group("table")),
                 m.group("col"),
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _ADD_GEN_COLUMN_RE.match(query)
         if m:
             c = self.repo.alter_add_generated_column(
@@ -4418,10 +4290,7 @@ class LakeSQL:
                 m.group("type"),
                 m.group("expr"),
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _ADD_COLUMN_RE.match(query)
         if m:
             c = self.repo.alter_add_column(
@@ -4431,10 +4300,7 @@ class LakeSQL:
                 m.group("col"),
                 m.group("type"),
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _RENAME_COLUMN_RE.match(query)
         if m:
             c = self.repo.alter_rename_column(
@@ -4444,10 +4310,7 @@ class LakeSQL:
                 m.group("old"),
                 m.group("new"),
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _DROP_COLUMN_RE.match(query)
         if m:
             c = self.repo.alter_drop_column(
@@ -4456,16 +4319,13 @@ class LakeSQL:
                 self._resolve_table(m.group("table")),
                 m.group("col"),
             )
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _SHOW_CONSTRAINTS_RE.match(query)
         if m:
             cons = self.repo.table_constraints(
                 self._resolve_table(m.group("table")), self.branch
             )
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 sorted(cons.items()), "name STRING, check_expr STRING"
             )
         m = _DESCRIBE_TABLE_RE.match(query)
@@ -4503,7 +4363,7 @@ class LakeSQL:
                         "; ".join(notes),
                     )
                 )
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 rows,
                 "col_name STRING, data_type STRING, nullable BOOLEAN, "
                 "extra STRING",
@@ -4516,13 +4376,13 @@ class LakeSQL:
                     int(m.group("retain")) if m.group("retain") else None
                 ),
             )
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 [(p,) for p in removed], "path STRING"
             )
         m = _CREATE_BRANCH_RE.match(query)
         if m:
             c = self.repo.create_branch(m.group("name"), m.group("src") or self.branch)
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 [(m.group("name"), c.id)], "branch STRING, head_commit STRING"
             )
         m = _DROP_BRANCH_RE.match(query)
@@ -4541,7 +4401,7 @@ class LakeSQL:
                 (b, self.repo.head(b).id, self.repo.head(b).version)
                 for b in self.repo.branches()
             ]
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 rows, "branch STRING, head_commit STRING, version INT"
             )
         m = _SHOW_PARTITIONS_RE.match(query)
@@ -4566,7 +4426,7 @@ class LakeSQL:
                         v = v[1:-1]
                     spec[k] = v
             parts = self.repo.show_partitions(name, self.branch, spec=spec)
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 [(p,) for p in parts], "partition STRING"
             )
         m = _COMMIT_RE.match(query)
@@ -4578,14 +4438,11 @@ class LakeSQL:
                 else "SQL: COMMIT"
             )
             c = self.repo.commit(self.branch, msg)
-            return local_df(self.spark, 
-                [(c.version, c.id, c.message)],
-                "version INT, commit_id STRING, message STRING",
-            )
+            return self._commit_result(c)
         m = _MERGE_BRANCH_RE.match(query)
         if m:
             c = self.repo.merge(self.spark, m.group("src"), m.group("dest"))
-            return local_df(self.spark, 
+            return local_df(self.spark,
                 [(m.group("dest"), c.version, c.id)],
                 "branch STRING, version INT, commit_id STRING",
             )
@@ -4621,21 +4478,9 @@ class LakeSQL:
         m = _INSERT_RE.match(query)
         if m:
             return self._insert(m.group("table"), m.group("body"), m.group("cols"))
-        m = _MERGE_INTO_RE.match(query)
-        if m:
-            return self._merge_into(
-                m.group("table"),
-                m.group("talias"),
-                m.group("body"),
-                m.group("clauses"),
-                evolve=m.group("evolve") is not None,
-            )
-        m = _DELETE_RE.match(query)
-        if m:
-            return self._delete(m.group("table"), m.group("cond"))
-        m = _UPDATE_RE.match(query)
-        if m:
-            return self._update(m.group("table"), m.group("sets"), m.group("cond"))
+        verb = query.split(None, 1)[:1]
+        if verb and verb[0].upper() in ("MERGE", "UPDATE", "DELETE"):
+            return self._dml(query)
 
         meta = self._metadata_agg(query)
         if meta is not None:
@@ -4644,12 +4489,7 @@ class LakeSQL:
         # 1) mask string literals: nothing inside quotes is a table
         #    reference or a time-travel clause
         literals: list[str] = []
-
-        def mask(m: re.Match) -> str:
-            literals.append(m.group(0))
-            return f"\x00{len(literals) - 1}\x00"
-
-        masked = _LITERAL_RE.sub(mask, query)
+        masked = _mask(query, literals)
 
         # 1b) backticked identifiers: normalize `t` → t for repo tables
         #     AND stored views ONLY in table position (directly after
@@ -4665,7 +4505,7 @@ class LakeSQL:
                 masked,
                 flags=re.IGNORECASE,
             )
-        masked = _BACKTICK_RE.sub(mask, masked)
+        masked = _mask(masked, literals, _BACKTICK_RE)
 
         # 2) time-travel clause rewrites FIRST: each pinned snapshot
         #    becomes a scoped `lakesnap__<t>__vN` view; the substituted view
@@ -4813,5 +4653,5 @@ class LakeSQL:
                 rewritten = pat.sub(f"lake__{t}", rewritten)
 
         # 4) restore the untouched literals
-        rewritten = _MASK_RE.sub(lambda m: literals[int(m.group(1))], rewritten)
+        rewritten = _unmask(rewritten, literals)
         return self.spark.sql(rewritten)

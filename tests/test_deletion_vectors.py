@@ -818,6 +818,9 @@ def test_dv_purge_commit_failure_leaves_branch_clean(spark, repo, monkeypatch):
         "WHEN MATCHED THEN DELETE WHEN NOT MATCHED THEN INSERT *",
         "WHEN MATCHED THEN UPDATE SET v = s.v - 1 WHEN NOT MATCHED THEN INSERT *",
         "WHEN NOT MATCHED THEN INSERT *",
+        # a SET value whose string literal spells a clause boundary
+        "WHEN MATCHED THEN UPDATE SET v = length('WHEN NOT MATCHED THEN INSERT *') "
+        "WHEN NOT MATCHED THEN INSERT *",
         # r11: multiple clauses of a kind, ordered, first match wins
         "WHEN MATCHED AND t.k % 3 = 0 THEN UPDATE SET v = s.v "
         "WHEN MATCHED AND t.k % 3 = 1 THEN DELETE "
@@ -864,6 +867,34 @@ def test_dv_merge_parity_matrix(spark, repo, clauses):
         (x.k, x.v) for x in repo.read_table(spark, "t", "rw").collect()
     )
     assert got_dv == got_rw
+
+
+@pytest.mark.parametrize(
+    "cond, gone",
+    [
+        ("k BETWEEN 3 AND 5", {3, 4, 5}),
+        # the @vN shorthand inside a subquery reads the OLD s; the DV route
+        # declines any embedded SELECT, so both end on the rewrite route
+        ("k IN (SELECT k FROM s@v{base})", {20, 21}),
+    ],
+)
+def test_sql_delete_parity_matrix(spark, repo, cond, gone):
+    """DELETE conditions answer identically through the deletion-vector
+    route and the rewrite route."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import LakeSQL
+
+    repo.write_table("main", "t", _kv(spark, 0, 30).repartition(2))
+    repo.write_table("main", "s", _kv(spark, 20, 22))
+    base = repo.commit("main", "base").version
+    repo.write_table("main", "s", _kv(spark, 0, 2))
+    repo.commit("main", "s moves on")
+    repo.create_branch("rw", "main")
+    stmt = f"DELETE FROM t WHERE {cond.format(base=base)}"
+    for dv, branch in ((True, "main"), (False, "rw")):
+        r = LakeSQL(spark, repo, branch, dv_writes=dv).sql(stmt).first()
+        assert r.rows_affected == len(gone), f"route dv={dv}"
+        got = {x.k for x in repo.read_table(spark, "t", branch).collect()}
+        assert got == set(range(30)) - gone, f"route dv={dv}"
 
 
 def test_dv_merge_on_evolved_table_binds_logical_names(spark, repo):
@@ -1356,6 +1387,19 @@ def test_merge_set_case_when_over_matched_named_column(spark, repo):
         assert r.rows_affected == 5
         got = {x.k: x.f for x in repo.read_table(spark, "t", "main").collect()}
         assert got == {k: (1 if k >= 5 and k % 2 == 0 else 0) for k in range(10)}
+        # ...and `CASE WHEN matched AND ...` inside a clause CONDITION is
+        # an expression too, not the start of another clause
+        r = sql.sql(
+            "MERGE INTO t USING s ON t.k = s.k "
+            "WHEN MATCHED AND CASE WHEN matched AND t.k > 6 THEN true END "
+            "THEN UPDATE SET f = 2"
+        ).first()
+        assert r.rows_affected == 1
+        got = {x.k: x.f for x in repo.read_table(spark, "t", "main").collect()}
+        assert got == {
+            k: (2 if k == 8 else 1 if k >= 5 and k % 2 == 0 else 0)
+            for k in range(10)
+        }
         # reset the acted-on values for the second route's pass
         sql.sql("UPDATE t SET f = 0")
 

@@ -236,6 +236,37 @@ def test_ngram_jaccard_stop_shingle_filter(spark):
     assert "CartesianProduct" not in plan
 
 
+def _dot_q_hof(a, b):
+    """Exact integer dot product of two quantized vectors (left fold): the
+    pure-Column reference spelling of the arithmetic ``dot_q`` vectorizes."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x
+    )
+
+
+def _lsh_bucket_hof(vec_q, dims: int = 64):
+    """Sign-pattern bucket id, bit p = [dot(vec, plane_p) >= 0], as exact
+    integer HOF folds: the reference spelling of ``lsh_bucket``."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import (
+        _N_PLANES,
+        _plane_weights,
+    )
+
+    def bit(p: int):
+        plane = F.array(*[F.lit(w).cast("long") for w in _plane_weights(p, dims)])
+        dot = F.aggregate(
+            F.zip_with(vec_q, plane, lambda x, w: x * w),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        )
+        return F.when(dot >= 0, F.lit(2**p).cast("long")).otherwise(F.lit(0).cast("long"))
+
+    out = bit(0)
+    for p in range(1, _N_PLANES):
+        out = out + bit(p)
+    return out
+
+
 def test_arrow_vector_ops_match_hof_reference(spark):
     """The Arrow-vectorized dot_q / lsh_bucket must be bit-identical to
     the pure-Column HOF reference spellings (exact int64 arithmetic both
@@ -244,9 +275,7 @@ def test_arrow_vector_ops_match_hof_reference(spark):
 
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import (
         dot_q,
-        dot_q_hof,
         lsh_bucket,
-        lsh_bucket_hof,
         with_quantized,
     )
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.sources.io import load_table
@@ -254,8 +283,8 @@ def test_arrow_vector_ops_match_hof_reference(spark):
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
     q = with_quantized(emb, "embedding")
     diff = q.select(
-        (dot_q(F.col("_q"), F.col("_q")) != dot_q_hof(F.col("_q"), F.col("_q"))).alias("d"),
-        (lsh_bucket(F.col("_q")) != lsh_bucket_hof(F.col("_q"))).alias("b"),
+        (dot_q(F.col("_q"), F.col("_q")) != _dot_q_hof(F.col("_q"), F.col("_q"))).alias("d"),
+        (lsh_bucket(F.col("_q")) != _lsh_bucket_hof(F.col("_q"))).alias("b"),
     )
     assert diff.where(F.col("d") | F.col("b")).count() == 0
 

@@ -4,6 +4,8 @@ by a LocalRelation (no job per action on statement-result frames)."""
 
 import datetime
 
+import pytest
+
 from manage_versions_of_data_in_data_lake_using_lakefs_spark.runtime import local_df
 
 CASES = [
@@ -17,6 +19,9 @@ CASES = [
     ),
     ([("x",), ("y",), (None,)], "tableName STRING"),
     ([], "a LONG, b STRING"),  # empty → classic fallback, same result
+    # PySpark's own verifier coerces anything into STRING ('1' here);
+    # the fast path must agree with it, not invent a stricter rule
+    ([(1,)], "a STRING"),
 ]
 
 
@@ -42,3 +47,20 @@ def test_local_df_structtype_schema(spark):
     fast = local_df(spark, [(1, "a")], st)
     assert fast.schema == classic.schema
     assert fast.collect() == classic.collect()
+
+
+BAD_CASES = [
+    ([(1.7,)], "a LONG"),
+    ([(1.5,)], "a INT"),
+]
+
+
+def test_local_df_rejects_mistyped_values_like_classic(spark):
+    """Arrow's conversion coerces silently (1.7 into a LONG column reads
+    back as 1); the fast path must refuse the same rows the classic
+    ``createDataFrame`` refuses."""
+    for rows, schema in BAD_CASES:
+        with pytest.raises(TypeError):
+            spark.createDataFrame(rows, schema)
+        with pytest.raises(TypeError):
+            local_df(spark, rows, schema).collect()
